@@ -1,9 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity over two double-array
   * columns — the hot kernel of the embedding ANN queries.
@@ -18,9 +19,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * results are bit-identical and the DuckDB oracles are unaffected.
   *
   * Registered as SQL function `cosine_sim` by [[graft.spark.GraftExtensions]]
-  * (the public `SparkSessionExtensions` route); callers that cannot assume
-  * the extension use [[TextFns.cosineIn]], which falls back to the HOF
-  * form when the function is not registered in the session.
+  * (the public `SparkSessionExtensions` route), which widens numeric
+  * arrays to double arrays; built by [[TextFns.cosineSim]]. Any other
+  * input type fails analysis.
   *
   * Null elements inside the arrays are not expected (embedding vectors are
   * dense); only top-level null arrays null out the result.
@@ -28,11 +29,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  // Input typing: `ExpectsInputTypes`' AbstractDataType is private[sql],
-  // so coercion is done at registration instead — GraftExtensions wraps
-  // both children in Cast(_, ArrayType(DoubleType)); the expression
-  // itself assumes double-array inputs.
   override def dataType: DataType = DoubleType
+
+  // coercion happens at registration (`ExpectsInputTypes`' AbstractDataType
+  // is private[sql]); anything still not a double array is rejected here
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelExprs.checkInputs(children, Seq.fill(2)(ArrayType(DoubleType)))
 
   override def prettyName: String = "cosine_sim"
 

@@ -1,23 +1,48 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{DataTypeMismatch, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.kernel.{Distance, Distances, Scoring, Weights}
 
-/** JVM entry point shared by the [[PairScoreMax]] codegen path and its
-  * interpreted eval: the symmetric analiticcl verification score over
-  * precomputed normKey strings + case classes (the exact body of
-  * [[Kernels.pairScoreMaxPre]]'s UDF — bit-identical by construction,
-  * pinned by KernelExprsSpec). NaN encodes null (no DL within
+/** JVM kernels behind the native verify expression [[PairAccept]] (codegen
+  * path and interpreted eval alike). [[KernelExprs.pairScoreMax]] is the
+  * symmetric analiticcl verification score over precomputed normKey
+  * strings + case classes — the reference that [[KernelExprs.pairAccept]]
+  * decides against, and the form KernelExprsSpec pins to
+  * [[graft.kernel.Scoring]]. NaN encodes null (no DL within
   * maxEditDistance, or an empty/null side); a legitimate score is a
   * finite weighted mean in [0,1], never NaN.
   */
 object KernelExprs {
+
+  /** Analysis-time input check shared by the native expressions: the
+    * first child whose type is not its `expected` type (array element
+    * nullability aside) yields Spark's DATATYPE_MISMATCH
+    * .UNEXPECTED_INPUT_TYPE, so a bad argument fails the DataFrame at
+    * construction instead of miscomputing per row.
+    */
+  private[functions] def checkInputs(children: Seq[Expression],
+      expected: Seq[DataType]): TypeCheckResult = {
+    def anyNulls(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(e)
+      case _ => t
+    }
+    children.zip(expected).zipWithIndex.collectFirst {
+      case ((c, want), i) if anyNulls(c.dataType) != want =>
+        DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
+          "paramIndex" -> Seq("first", "second", "third", "fourth")(i),
+          "requiredType" -> s"\"${want.sql}\"",
+          "inputSql" -> s"\"${c.sql}\"",
+          "inputType" -> s"\"${c.dataType.sql}\""))
+    }.getOrElse(TypeCheckSuccess)
+  }
 
   def pairScoreMax(na: UTF8String, nb: UTF8String, la: Byte, lb: Byte,
       maxEditDistance: Int, wLd: Double, wLcs: Double, wPrefix: Double,
@@ -112,95 +137,23 @@ object KernelExprs {
   }
 }
 
-/** Native Catalyst expression for the dedup verify kernel — the largest
+/** Native Catalyst expression for the dedup verify filter — the largest
   * single phase of the pipeline at 1 core (BASELINE.md: 263 s of 404).
-  * Same role as [[CosineSim]] for the embedding path: the ScalaUDF route
-  * pays a converter boundary per call (UTF8String -> String -> boxed
-  * Option[Double] through the encoder machinery, outside whole-stage
-  * codegen); this expression participates in codegen and calls the
-  * static kernel directly from the generated stage method. Results are
-  * bit-identical to [[Kernels.pairScoreMaxPre]] — both paths execute
-  * the same [[KernelExprs.pairScoreMax]] arithmetic (same
-  * Distances/Scoring calls in the same order).
-  *
-  * Registered as SQL function `pair_score_max` by
-  * [[graft.spark.GraftExtensions]]; sessions without the extension fall
-  * back to the UDF via [[Kernels.pairScoreMaxPreIn]].
-  *
-  * Children: normA/normB (string normKeys), caseA/caseB (byte case
-  * classes: 0 lower, 1 not lower, 2 empty — see [[Kernels.caseClass]]).
-  * maxEditDistance and the weights are plan-time constants (extracted
-  * from foldable literals at registration), so codegen embeds them as
-  * Java literals.
-  */
-case class PairScoreMax(
-    normA: Expression, normB: Expression,
-    caseA: Expression, caseB: Expression,
-    maxEditDistance: Int,
-    wLd: Double, wLcs: Double, wPrefix: Double,
-    wSuffix: Double, wCase: Double)
-    extends Expression {
-
-  override def children: Seq[Expression] = Seq(normA, normB, caseA, caseB)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pair_score_max"
-
-  override def eval(input: InternalRow): Any = {
-    val a = normA.eval(input)
-    val b = normB.eval(input)
-    val ca = caseA.eval(input)
-    val cb = caseB.eval(input)
-    if (a == null || b == null || ca == null || cb == null) null
-    else {
-      val v = KernelExprs.pairScoreMax(
-        a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String],
-        ca.asInstanceOf[Byte], cb.asInstanceOf[Byte],
-        maxEditDistance, wLd, wLcs, wPrefix, wSuffix, wCase)
-      if (java.lang.Double.isNaN(v)) null else v
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
-    val v = ctx.freshName("pairScore")
-    // Double.toString round-trips exactly, so the embedded literals are
-    // the same doubles the interpreted path uses
-    def dlit(x: Double): String = java.lang.Double.toString(x) + "D"
-    val call = s"graft.functions.KernelExprs.pairScoreMax(" +
-      s"${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value}, " +
-      s"$maxEditDistance, ${dlit(wLd)}, ${dlit(wLcs)}, ${dlit(wPrefix)}, " +
-      s"${dlit(wSuffix)}, ${dlit(wCase)})"
-    ev.copy(code = code"""
-      ${evs(0).code}
-      ${evs(1).code}
-      ${evs(2).code}
-      ${evs(3).code}
-      boolean ${ev.isNull} = true;
-      double ${ev.value} = 0.0;
-      if (!${evs(0).isNull} && !${evs(1).isNull} &&
-          !${evs(2).isNull} && !${evs(3).isNull}) {
-        final double $v = $call;
-        if (!java.lang.Double.isNaN($v)) {
-          ${ev.isNull} = false;
-          ${ev.value} = $v;
-        }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(normA = newChildren(0), normB = newChildren(1),
-      caseA = newChildren(2), caseB = newChildren(3))
-}
-
-/** Native codegen decision form of [[PairScoreMax]] — the dedup verify
-  * filter (`pair_accept(...) == pair_score_max(...) >= threshold`,
-  * decided without the exact LCS whenever the score bounds already
-  * settle it; see [[KernelExprs.pairAccept]]). Never null: a null input
+  * `pair_accept(...)` is exactly `pairScoreMax(...) >= threshold`
+  * ([[KernelExprs.pairScoreMax]]), decided without the exact LCS whenever
+  * the score bounds already settle it (see [[KernelExprs.pairAccept]]).
+  * It participates in whole-stage codegen and calls the static kernel
+  * directly from the generated stage method. Never null: a null input
   * channel or an out-of-band DL is a reject, exactly like the
   * score-form filter `score IS NOT NULL AND score >= threshold`.
+  *
+  * Registered as SQL function `pair_accept` by
+  * [[graft.spark.GraftExtensions]]; built by [[Kernels.pairAccept]].
+  * Children: normA/normB (string normKeys), caseA/caseB (byte case
+  * classes: 0 lower, 1 not lower, 2 empty — see [[Kernels.caseClass]]).
+  * maxEditDistance, the weights and the threshold are plan-time
+  * constants (extracted from foldable literals at registration), so
+  * codegen embeds them as Java literals.
   */
 case class PairAccept(
     normA: Expression, normB: Expression,
@@ -214,6 +167,9 @@ case class PairAccept(
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
   override def prettyName: String = "pair_accept"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelExprs.checkInputs(children, Seq(StringType, StringType, ByteType, ByteType))
 
   override def eval(input: InternalRow): Any = {
     val a = normA.eval(input)

@@ -1,9 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Native Catalyst expression: |A ∩ B| for two SORTED (ascending),
   * duplicate-free, null-free int arrays — the per-pair kernel of the
@@ -20,9 +21,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * arrays exactly.
   *
   * Registered as SQL function `sorted_intersect_count` by
-  * [[graft.spark.GraftExtensions]]; callers that cannot assume the
-  * extension use [[TextFns.sortedIntersectCountIn]], which falls back
-  * to `size(array_intersect(a, b))` (identical by the argument above).
+  * [[graft.spark.GraftExtensions]], which widens byte and short arrays
+  * to int arrays; built by [[TextFns.sortedIntersectCount]]. Any other
+  * input type fails analysis.
   *
   * Caller contract (not checked): elements sorted ascending, distinct,
   * no null elements. Only top-level null arrays null out the result.
@@ -31,6 +32,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = IntegerType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelExprs.checkInputs(children, Seq.fill(2)(ArrayType(IntegerType)))
 
   override def prettyName: String = "sorted_intersect_count"
 

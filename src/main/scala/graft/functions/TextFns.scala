@@ -10,11 +10,10 @@ import org.apache.spark.sql.types.LongType
   * so Catalyst folds constants, pushes filters, prunes columns and keeps
   * the hot path inside WholeStageCodegen.
   *
-  * Two hash families are provided for MinHash:
-  *  - md5-based ("portable"): bit-identical SQL exists for DuckDB/any
-  *    ANSI engine — used by the correctness oracle;
-  *  - xxhash64-based ("fast"): Spark-native codegen'd hashing — used by
-  *    the production/bench path. Same pipeline shape, same recall math.
+  * The MinHash/SimHash family here is md5-based ("portable"):
+  * bit-identical SQL exists for DuckDB/any ANSI engine, so the
+  * correctness oracle can replay it. The production/bench path hashes
+  * with [[FastHash]] instead — same pipeline shape, same recall math.
   */
 object TextFns {
 
@@ -60,13 +59,6 @@ object TextFns {
     array((0 until k).map(i =>
       array_min(transform(shingles, s => md5Hash60Seeded(i, s)))): _*)
 
-  /** Fast MinHash signature: one xxhash64 pass per (seed, shingle);
-    * xxhash64 is a native codegen'd Catalyst expression.
-    */
-  def minhashFast(shingles: Column, k: Int): Column =
-    array((0 until k).map(i =>
-      array_min(transform(shingles, s => xxhash64(lit(i), s)))): _*)
-
   /** Bit-identical JVM implementation of
     * `minhashPortable(charShingles(c, n), k)`: same md5("<seed>:<shingle>")
     * → first-15-hex-digits-as-long → per-seed min math, computed in one
@@ -105,34 +97,6 @@ object TextFns {
     }
     f(c)
   }
-
-  /** LSH band keys: split a k-long signature into `bands` rows of
-    * `rowsPerBand`, hash each band slice; returns
-    * array<struct<band:int, key:long>> ready to explode. Candidate pairs
-    * = equal (band, key). Pairs joined on this key need no further
-    * shuffle by construction.
-    */
-  private def bandSliceStr(sig: Column, b: Int, rowsPerBand: Int): Column =
-    concat_ws("_",
-      transform(slice(sig, b * rowsPerBand + 1, rowsPerBand), _.cast("string")))
-
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64(lit(b), bandSliceStr(sig, b, rowsPerBand)).as("key")
-      )
-    }: _*)
-
-  /** Portable band key (md5-based) for oracle-checked LSH queries. */
-  def lshBandsPortable(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        md5Hash60(concat_ws("_", lit(b), bandSliceStr(sig, b, rowsPerBand)))
-          .as("key")
-      )
-    }: _*)
 
   /** SimHash from an array of (already-computed) 60-bit shingle hashes:
     * bit j of the result is the sign of Σ (bit j of hash ? 1 : -1).
@@ -250,8 +214,7 @@ object TextFns {
   /** Cosine similarity between two double-array columns via a single
     * zip_with + aggregate pass — the engine-portable formulation (higher-
     * order functions run INTERPRETED in Spark: three lambda dispatches
-    * per dimension; see [[graft.functions.CosineSim]] for the codegen
-    * path and [[cosineIn]] for the picker).
+    * per dimension). CosineSimSpec pins the codegen [[cosineSim]] to it.
     */
   def cosine(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (s, v) => s + v)
@@ -260,29 +223,20 @@ object TextFns {
     dot / (na * nb)
   }
 
-  /** Cosine similarity through the fastest formulation the session
-    * offers: the native codegen `cosine_sim` expression when
-    * [[graft.spark.GraftExtensions]] is installed (bit-identical IEEE
-    * operation order to the HOF form), else the interpreted HOF form —
-    * a query authored with this runs correctly in ANY session and fast
-    * in ours.
+  /** Cosine similarity through the native codegen `cosine_sim`
+    * expression ([[graft.functions.CosineSim]], registered by
+    * [[graft.spark.GraftExtensions]]): bit-identical IEEE operation order
+    * to the HOF [[cosine]], one fused loop instead of interpreted lambdas.
     */
-  def cosineIn(s: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column =
-    if (s.catalog.functionExists("cosine_sim")) call_function("cosine_sim", a, b)
-    else cosine(a, b)
+  def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
   /** |A ∩ B| of two SORTED, duplicate-free, null-free int-array columns
-    * through the fastest formulation the session offers: the native
-    * allocation-free merge-scan `sorted_intersect_count`
-    * ([[graft.functions.SortedIntersectCount]]) when
-    * [[graft.spark.GraftExtensions]] is installed, else
-    * `size(array_intersect(a, b))` — identical on distinct arrays (set
-    * size is order-independent), so a query authored with this runs
-    * correctly in ANY session and fast in ours.
+    * through the native allocation-free merge scan
+    * `sorted_intersect_count` ([[graft.functions.SortedIntersectCount]],
+    * registered by [[graft.spark.GraftExtensions]]) — equal to
+    * `size(array_intersect(a, b))` on such arrays (set size is
+    * order-independent).
     */
-  def sortedIntersectCountIn(s: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column): Column =
-    if (s.catalog.functionExists("sorted_intersect_count"))
-      call_function("sorted_intersect_count", a, b)
-    else size(array_intersect(a, b))
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    call_function("sorted_intersect_count", a, b)
 }

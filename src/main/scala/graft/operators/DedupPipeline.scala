@@ -212,7 +212,8 @@ object DedupPipeline {
     // buckets keep multiplicity low, and map-side partial-distinct
     // could not collapse cross-bucket copies anyway, they live in
     // different partitions). Measured min-of-reps: -8% on the
-    // distinct+verify segment at both 1 and 32 cores (Scratch exp 3).
+    // distinct+verify segment at both 1 and 32 cores (OPTIMIZATION_r06.md
+    // change 13).
     //
     // The partition COUNT is memory-derived, not the session default
     // (guide §2.2: size partitions by bytes, and §3.1: a shuffled-hash
@@ -333,9 +334,10 @@ object DedupPipeline {
     * the sketched base three times (3x the task count, three passes
     * over the checkpoint blocks) per consumer — and this plan is
     * consumed twice (hot-key count-agg, bucket pass). Same (id, len, k)
-    * multiset, measured 10-18% off the two candidate passes (Scratch
-    * A/B, 1.2M-cluster base: 1 core 62.8 -> 51.6s, 32 cores
-    * 3.6 -> 3.3s, pair count bit-identical at 5,089,778).
+    * multiset, measured 10-18% off the two candidate passes
+    * (OPTIMIZATION_r06.md change 11, 1.2M-cluster base: 1 core
+    * 62.8 -> 51.6s, 32 cores 3.6 -> 3.3s, pair count bit-identical at
+    * 5,089,778).
     */
   def candidateKeys(base: DataFrame, cfg: DedupConfig): DataFrame = {
     val chunkBits = 64 / cfg.simhashBands
@@ -464,15 +466,14 @@ object DedupPipeline {
 
   /** Verification: analiticcl kernel, each distinct pair DECIDED once on
     * PRECOMPUTED norms (features once per pair, both direction
-    * normalizations, max, compared to the threshold). The filter goes
-    * through [[Kernels.pairAcceptPreIn]]: the native codegen PairAccept
-    * expression when GraftExtensions is installed — the verify decision
-    * runs inside the stage's generated method (no per-pair UDF converter
-    * boundary on the pipeline's largest 1-core phase) AND skips the
-    * exact-LCS DP whenever the prefix/suffix lower bound or the minLen
-    * upper bound already decides the score against the threshold (most
-    * pairs — see [[graft.functions.KernelExprs.pairAccept]]);
-    * bit-identical exact-score UDF fallback otherwise. Norms arrive by
+    * normalizations, max, compared to the threshold). The filter is
+    * [[Kernels.pairAccept]], the native codegen PairAccept expression —
+    * the verify decision runs inside the stage's generated method (no
+    * per-pair UDF converter boundary on the pipeline's largest 1-core
+    * phase) AND skips the exact-LCS DP whenever the prefix/suffix lower
+    * bound or the minLen upper bound already decides the score against
+    * the threshold (most pairs — see
+    * [[graft.functions.KernelExprs.pairAccept]]). Norms arrive by
     * SHUFFLE-HASH joins (hinted): no sort of the candidate stream
     * (sort-merge measured 2-3x slower) and no single-threaded driver
     * broadcast build (at 1.5M reps a broadcast serialized the whole
@@ -511,8 +512,7 @@ object DedupPipeline {
         j1p.join(textsB.hint("SHUFFLE_HASH"), Seq("b"))
       }
     joined
-      .filter(K.pairAcceptPreIn(candidates.sparkSession)(
-        col("na"), col("nb"), col("lca"), col("lcb"),
+      .filter(K.pairAccept(col("na"), col("nb"), col("lca"), col("lcb"),
         cfg.maxEditDistance, cfg.scoreThreshold, cfg.weights))
       .select(col("a").as("src"), col("b").as("dst"))
   }

@@ -3,18 +3,23 @@ package graft.spark
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType, LongType,
+  NumericType, ShortType}
 
-import graft.functions.{CosineSim, PairAccept, PairScoreMax, SortedIntersectCount}
+import graft.functions.{CosineSim, PairAccept, SortedIntersectCount}
 
 /** Session extensions registering graft's native Catalyst expressions
   * (the public injection route: `.config("spark.sql.extensions",
   * classOf[GraftExtensions].getName)` or `--conf spark.sql.extensions=...`
-  * on spark-submit — no private Spark API touched).
+  * on spark-submit — no private Spark API touched): `cosine_sim`,
+  * `sorted_intersect_count` and `pair_accept`.
   *
-  * Callers that may run in a session built without the extension go
-  * through [[graft.functions.TextFns.cosineIn]], which checks the
-  * session's registry and falls back to the interpreted HOF formulation.
+  * The extension is required: the engine's column builders call these
+  * functions by name, and a session without it fails the DataFrame at
+  * analysis with UNRESOLVED_ROUTINE naming the function. Each builder
+  * widens only the input types its expression can take losslessly;
+  * anything else reaches the expression's `checkInputDataTypes` and
+  * fails analysis.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -25,38 +30,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2,
           s"cosine_sim takes 2 arguments, got ${children.length}")
-        // input coercion at the registration seam (CosineSim assumes
-        // double arrays; see the note there): float/int arrays widen
-        def widen(e: Expression): Expression =
-          if (e.dataType == ArrayType(DoubleType, containsNull = false)) e
-          else Cast(e, ArrayType(DoubleType))
-        CosineSim(widen(children.head), widen(children(1)))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("pair_score_max"),
-      new ExpressionInfo(classOf[PairScoreMax].getName, "pair_score_max"),
-      (children: Seq[Expression]) => {
-        require(children.length == 10,
-          "pair_score_max takes (normA, normB, caseA, caseB, " +
-            s"maxEditDistance, wLd, wLcs, wPrefix, wSuffix, wCase), " +
-            s"got ${children.length} arguments")
-        // config args must be plan-time constants: the kernel's band
-        // width and weights are embedded in the generated code
-        def num(e: Expression, what: String): Double = {
-          require(e.foldable, s"pair_score_max: $what must be a literal")
-          e.eval(null) match {
-            case n: java.lang.Number => n.doubleValue()
-            case other => sys.error(s"pair_score_max: $what is not numeric: $other")
-          }
+        def widen(e: Expression): Expression = e.dataType match {
+          case ArrayType(DoubleType, false) => e
+          case ArrayType(_: NumericType, _) => Cast(e, ArrayType(DoubleType))
+          case _ => e
         }
-        PairScoreMax(
-          children(0), children(1),
-          Cast(children(2), ByteType), Cast(children(3), ByteType),
-          maxEditDistance = num(children(4), "maxEditDistance").toInt,
-          wLd = num(children(5), "wLd"), wLcs = num(children(6), "wLcs"),
-          wPrefix = num(children(7), "wPrefix"),
-          wSuffix = num(children(8), "wSuffix"),
-          wCase = num(children(9), "wCase"))
+        CosineSim(widen(children.head), widen(children(1)))
       }))
     e.injectFunction((
       FunctionIdentifier("pair_accept"),
@@ -66,6 +45,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "pair_accept takes (normA, normB, caseA, caseB, " +
             s"maxEditDistance, wLd, wLcs, wPrefix, wSuffix, wCase, " +
             s"threshold), got ${children.length} arguments")
+        // config args must be plan-time constants: the kernel's band
+        // width, weights and threshold are embedded in the generated code
         def num(e: Expression, what: String): Double = {
           require(e.foldable, s"pair_accept: $what must be a literal")
           e.eval(null) match {
@@ -73,9 +54,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             case other => sys.error(s"pair_accept: $what is not numeric: $other")
           }
         }
+        def caseByte(e: Expression): Expression = e.dataType match {
+          case ByteType | ShortType | IntegerType | LongType => Cast(e, ByteType)
+          case _ => e
+        }
         PairAccept(
           children(0), children(1),
-          Cast(children(2), ByteType), Cast(children(3), ByteType),
+          caseByte(children(2)), caseByte(children(3)),
           maxEditDistance = num(children(4), "maxEditDistance").toInt,
           wLd = num(children(5), "wLd"), wLcs = num(children(6), "wLcs"),
           wPrefix = num(children(7), "wPrefix"),
@@ -90,13 +75,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2,
           s"sorted_intersect_count takes 2 arguments, got ${children.length}")
-        // input coercion at the registration seam (the expression
-        // assumes int arrays; see the caller contract there)
-        def toInts(e: Expression): Expression =
-          if (e.dataType.isInstanceOf[ArrayType] &&
-              e.dataType.asInstanceOf[ArrayType].elementType == IntegerType) e
-          else Cast(e, ArrayType(IntegerType))
-        SortedIntersectCount(toInts(children.head), toInts(children(1)))
+        def widen(e: Expression): Expression = e.dataType match {
+          case ArrayType(ByteType | ShortType, _) => Cast(e, ArrayType(IntegerType))
+          case _ => e
+        }
+        SortedIntersectCount(widen(children.head), widen(children(1)))
       }))
   }
 }

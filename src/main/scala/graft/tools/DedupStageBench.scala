@@ -129,7 +129,7 @@ object DedupStageBench {
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      // native kernel expressions (codegen'd pair_score_max on the
+      // native kernel expressions (codegen'd pair_accept on the
       // verify stage — the largest single phase at 1 core)
       .config("spark.sql.extensions", graft.spark.GraftExtensions.name)
       // tmpfs shuffle: the candidate stages are shuffle-volume-bound; on

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan inspection for the operator queries: prints
   * explain("formatted") so scan pruning (ReadSchema/PushedFilters),
   * join strategies (Broadcast/ShuffleHash/SortMerge) and
@@ -15,11 +13,7 @@ object ExplainDump {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_agg", "q3_join_topk", "dedup_exact", "emb_ann_lsh",
         "dedup_substring")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.spark.Sessions.local(4, "ExplainDump")
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- names; fn <- graft.SparkEntry.queries.get(name)) {
       println(s"\n========== $name ==========")

@@ -143,7 +143,7 @@ object QueryProbe {
           val t = base.select(col("doc_id"), col("source"), sh.as("sh"))
           val iCol =
             if (sorted)
-              T.sortedIntersectCountIn(spark)(col("a.sh"), col("b.sh"))
+              T.sortedIntersectCount(col("a.sh"), col("b.sh"))
             else size(array_intersect(col("a.sh"), col("b.sh")))
           t.as("a").repartition(par).join(t.as("b"),
               col("a.source") === col("b.source") &&
@@ -189,7 +189,7 @@ object QueryProbe {
                   Seq("b"))
             }
           jo.select(col("a"), col("b"),
-              graft.functions.TextFns.cosineIn(spark)(col("aemb"),
+              graft.functions.TextFns.cosineSim(col("aemb"),
                 col("bemb")).as("cos"))
             .filter(col("cos") >= cfg.cosThreshold)
         }

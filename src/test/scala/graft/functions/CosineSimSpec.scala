@@ -18,18 +18,11 @@ class CosineSimSpec extends SparkSpecBase {
     assert(spark.catalog.functionExists("cosine_sim"))
     val df = randomVecs(200, 64, 42L).toDF("id", "a", "b")
     val out = df.select(
-      call_function("cosine_sim", col("a"), col("b")).as("native"),
+      T.cosineSim(col("a"), col("b")).as("native"),
       T.cosine(col("a"), col("b")).as("hof")
     ).collect()
     // identical IEEE operation order -> identical doubles, not just close
     assert(out.forall(r => r.getDouble(0) == r.getDouble(1)))
-  }
-
-  test("cosineIn picks the native expression when registered") {
-    val df = randomVecs(10, 16, 7L).toDF("id", "a", "b")
-    val plan = df.select(T.cosineIn(spark)(col("a"), col("b")).as("c"))
-      .queryExecution.analyzed.toString
-    assert(plan.contains("cosine_sim"))
   }
 
   test("null arrays null out; self-similarity is 1.0") {
@@ -55,5 +48,23 @@ class CosineSimSpec extends SparkSpecBase {
       val interpreted = df.select(expr).collect().map(_.getDouble(0))
       assert(withCodegen.toSeq == interpreted.toSeq)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+  }
+
+  test("numeric arrays widen to double; other element types fail analysis") {
+    val df = randomVecs(20, 8, 3L).toDF("id", "a", "b")
+      .select(col("a"), col("b"),
+        transform(col("a"), x => round(x * 100).cast("int")).as("ai"),
+        transform(col("b"), x => round(x * 100).cast("int")).as("bi"))
+    val out = df.select(
+      T.cosineSim(col("ai"), col("bi")),
+      T.cosine(col("ai").cast("array<double>"), col("bi").cast("array<double>")))
+      .collect()
+    assert(out.forall(r => r.getDouble(0) == r.getDouble(1)))
+    for (bad <- Seq(transform(col("a"), _.cast("string")), col("a").cast("string"))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(T.cosineSim(bad, col("b")))
+      }
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
+    }
   }
 }

@@ -5,15 +5,22 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.kernel.Weights
 
-/** Parity pin for the native codegen verify kernel: the PairScoreMax
-  * expression must be BIT-identical to the pairScoreMaxPre UDF on every
-  * input class (both run [[KernelExprs.pairScoreMax]]; this spec guards
-  * the expression plumbing — null channels, byte casts, literal
-  * embedding in generated code).
+/** Parity pins for the native verify filter `pair_accept`: in a plan it
+  * must decide exactly `KernelExprs.pairScoreMax(...) >= threshold`
+  * computed on the driver (guards the expression plumbing — null
+  * channels, byte casts, literal embedding in generated code), and
+  * `KernelExprs.pairScoreMax` itself must equal the `graft.kernel`
+  * scoring it stands in for.
   */
 class KernelExprsSpec extends SparkSpecBase {
 
   private val K = Kernels.test
+
+  private val weightSets = Seq(
+    Weights(),
+    Weights(ld = 1.0, lcs = 0.0, prefix = 0.2, suffix = 0.2, caseW = 0.1),
+    Weights(ld = 0.1, lcs = 1.0, prefix = 0.1, suffix = 0.1, caseW = 0.1),
+    Weights(ld = 0.5, lcs = -0.2, prefix = 0.3, suffix = 0.3, caseW = 0.1))
 
   /** Deterministic normKey-ish pairs: strings over the compact class
     * alphabet (codepoints 33..59 = the 27-class test alphabet), lengths
@@ -49,51 +56,66 @@ class KernelExprsSpec extends SparkSpecBase {
       ("abc", "abc", 0.toByte, 1.toByte))
   }
 
-  test("PairScoreMax expression == pairScoreMaxPre UDF, bit for bit") {
-    import spark.implicits._
-    assert(spark.catalog.functionExists("pair_score_max"),
-      "SparkSpecBase must install GraftExtensions")
-    val df = pairs.toDF("na", "nb", "ca", "cb")
-      .select(col("na"), col("nb"),
-        col("ca").cast("byte").as("ca"), col("cb").cast("byte").as("cb"))
-    val w = Weights()
-    val both = df.select(
-      K.pairScoreMaxPre(col("na"), col("nb"), col("ca"), col("cb"), 3, w)
-        .as("udf"),
-      K.pairScoreMaxPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 3, w)
-        .as("native"))
-      .collect()
-    assert(both.length == pairs.length)
-    var scored = 0
-    both.foreach { r =>
-      val u = if (r.isNullAt(0)) None else Some(r.getDouble(0))
-      val n = if (r.isNullAt(1)) None else Some(r.getDouble(1))
-      assert(u == n, s"udf=$u native=$n") // exact, not tolerance
-      if (n.isDefined) scored += 1
+  /** The fixture as an RDD-backed DataFrame: a local literal table would
+    * let ConvertToLocalRelation evaluate the expression at plan time and
+    * bypass the generated code.
+    */
+  private def pairsDf = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("na", StringType), StructField("nb", StringType),
+      StructField("ca", ByteType), StructField("cb", ByteType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      pairs.map { case (a, b, ca, cb) => Row(a, b, ca, cb) }, 4), schema)
+  }
+
+  /** `pair_accept` in a plan vs the JVM reference on the driver, at three
+    * thresholds, with whole-stage codegen on and then off (off also
+    * forces interpreted expression eval).
+    */
+  private def assertAcceptMatchesReference(maxEd: Int, w: Weights): Unit = {
+    import org.apache.spark.unsafe.types.UTF8String.{fromString => u8}
+    val modes = Seq(
+      Map("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "FALLBACK"),
+      Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (mode <- modes; t <- Seq(0.5, 0.7, 0.9)) {
+      val prev = mode.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      val rows = try {
+        mode.foreach { case (k, v) => spark.conf.set(k, v) }
+        pairsDf.select(col("na"), col("nb"), col("ca"), col("cb"),
+          K.pairAccept(col("na"), col("nb"), col("ca"), col("cb"), maxEd, t, w)
+            .as("accept"))
+          .collect()
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      assert(rows.length == pairs.length)
+      var accepts = 0
+      rows.foreach { r =>
+        assert(!r.isNullAt(4), "pair_accept must never be null")
+        val score = KernelExprs.pairScoreMax(u8(r.getString(0)),
+          u8(r.getString(1)), r.getByte(2), r.getByte(3), maxEd,
+          w.ld, w.lcs, w.prefix, w.suffix, w.caseW)
+        val expected = !java.lang.Double.isNaN(score) && score >= t
+        assert(r.getBoolean(4) == expected, s"mode=$mode t=$t score=$score row=$r")
+        if (expected) accepts += 1
+      }
+      // the fixture must exercise both outcomes at every threshold
+      assert(accepts > 0 && accepts < rows.length, s"t=$t accepts=$accepts")
     }
-    // the fixture must exercise BOTH channels meaningfully
-    assert(scored > 50, s"only $scored scored pairs — fixture too thin")
-    assert(scored < both.length, "no null results — fixture too easy")
+  }
+
+  test("pair_accept in a plan == pairScoreMax >= threshold, codegen on/off") {
+    assertAcceptMatchesReference(3, Weights())
   }
 
   test("non-default weights and maxEditDistance reach the generated code") {
-    import spark.implicits._
-    val w = Weights(ld = 0.7, lcs = 0.1, prefix = 0.1, suffix = 0.05,
-      caseW = 0.05)
-    val df = pairs.toDF("na", "nb", "ca", "cb")
-      .select(col("na"), col("nb"),
-        col("ca").cast("byte").as("ca"), col("cb").cast("byte").as("cb"))
-    val both = df.select(
-      K.pairScoreMaxPre(col("na"), col("nb"), col("ca"), col("cb"), 1, w)
-        .as("udf"),
-      K.pairScoreMaxPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 1, w)
-        .as("native"))
-      .collect()
-    both.foreach { r =>
-      val u = if (r.isNullAt(0)) None else Some(r.getDouble(0))
-      val n = if (r.isNullAt(1)) None else Some(r.getDouble(1))
-      assert(u == n, s"udf=$u native=$n")
-    }
+    assertAcceptMatchesReference(1, Weights(ld = 0.7, lcs = 0.1, prefix = 0.1,
+      suffix = 0.05, caseW = 0.05))
   }
 
   test("pairAccept decision == pairScoreMax >= threshold, every weight set") {
@@ -114,11 +136,6 @@ class KernelExprsSpec extends SparkSpecBase {
         else graft.sources.SyntheticText.corrupt(rng, a, 1 + rng.nextInt(3))
       (a, b, next(3).toByte, next(3).toByte)
     }
-    val weightSets = Seq(
-      Weights(),
-      Weights(ld = 1.0, lcs = 0.0, prefix = 0.2, suffix = 0.2, caseW = 0.1),
-      Weights(ld = 0.1, lcs = 1.0, prefix = 0.1, suffix = 0.1, caseW = 0.1),
-      Weights(ld = 0.5, lcs = -0.2, prefix = 0.3, suffix = 0.3, caseW = 0.1))
     val thresholds = Seq(0.0, 0.3, 0.5, 0.7, 0.9, 1.0)
     var accepts = 0
     var rejectsScored = 0
@@ -137,29 +154,6 @@ class KernelExprsSpec extends SparkSpecBase {
     assert(rejectsScored > 100, s"only $rejectsScored scored rejects")
   }
 
-  test("PairAccept expression == pair_score_max >= threshold in a plan") {
-    import spark.implicits._
-    assert(spark.catalog.functionExists("pair_accept"),
-      "SparkSpecBase must install GraftExtensions")
-    val w = Weights()
-    val df = pairs.toDF("na", "nb", "ca", "cb")
-      .select(col("na"), col("nb"),
-        col("ca").cast("byte").as("ca"), col("cb").cast("byte").as("cb"))
-    val score = K.pairScoreMaxPreIn(spark)(
-      col("na"), col("nb"), col("ca"), col("cb"), 3, w)
-    for (t <- Seq(0.5, 0.7, 0.9)) {
-      val both = df.select(
-        (score.isNotNull && score >= t).as("viaScore"),
-        K.pairAcceptPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"),
-          3, t, w).as("viaAccept"))
-        .collect()
-      both.foreach { r =>
-        assert(!r.isNullAt(1), "pair_accept must never be null")
-        assert(r.getBoolean(0) == r.getBoolean(1), s"t=$t row=$r")
-      }
-    }
-  }
-
   test("the accept-filter plan stays codegen'd with the extension") {
     val df = spark.range(50).select(
       concat(lit("abcd"), (col("id") % 7).cast("string")).as("na"),
@@ -167,27 +161,65 @@ class KernelExprsSpec extends SparkSpecBase {
       (col("id") % 3).cast("byte").as("ca"),
       (col("id") % 3).cast("byte").as("cb"))
     val plan = df.filter(
-      K.pairAcceptPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 3,
-        0.7, Weights()))
+      K.pairAccept(col("na"), col("nb"), col("ca"), col("cb"), 3, 0.7, Weights()))
       .queryExecution.executedPlan.toString
     assert(plan.contains("pair_accept"), plan)
     assert(!plan.contains("UDF"), s"native path still routes through a UDF:\n$plan")
   }
 
-  test("the verify plan stays codegen'd (no UDF boundary) with the extension") {
-    // a range source, not a local literal table: ConvertToLocalRelation
-    // would otherwise evaluate the projection at plan time and leave
-    // nothing to inspect (which exercises eval(), not the plan)
-    val df = spark.range(50).select(
-      concat(lit("abcd"), (col("id") % 7).cast("string")).as("na"),
-      concat(lit("abc"), (col("id") % 5).cast("string")).as("nb"),
-      (col("id") % 3).cast("byte").as("ca"),
-      (col("id") % 3).cast("byte").as("cb"))
-    val plan = df.select(
-      K.pairScoreMaxPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 3,
-        Weights()).as("s"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("pair_score_max"), plan)
-    assert(!plan.contains("UDF"), s"native path still routes through a UDF:\n$plan")
+  test("pairScoreMax == graft.kernel scoring, max over both directions") {
+    import spark.implicits._
+    import org.apache.spark.unsafe.types.UTF8String.{fromString => u8}
+    import graft.kernel.{Alphabet, Scoring}
+    import graft.sources.SyntheticText
+    // ClipGen-shaped transcripts: canonical phrases and corrupted copies
+    // within a few edits, plus unrelated phrases; a capitalized first
+    // letter on some texts exercises the case feature
+    val rng = new scala.util.Random(0xC11DL)
+    def cap(s: String) = if (rng.nextInt(4) == 0) s.capitalize else s
+    val texts = (1 to 300).map { _ =>
+      val a = SyntheticText.phrase(rng, 3 + rng.nextInt(6))
+      val b =
+        if (rng.nextInt(4) == 0) SyntheticText.phrase(rng, 3 + rng.nextInt(6))
+        else SyntheticText.corrupt(rng, a, 1 + rng.nextInt(4))
+      (cap(a), cap(b))
+    }
+    // normKey / caseClass through the production column functions
+    val keyed = texts.toDF("a", "b").select(col("a"), col("b"),
+      K.normKey(col("a")), K.normKey(col("b")),
+      K.caseClass(col("a")), K.caseClass(col("b"))).collect()
+    val alphabet = Alphabet.test
+    var scored = 0
+    for (r <- keyed; w <- weightSets) {
+      val (a, b) = (r.getString(0), r.getString(1))
+      val got = KernelExprs.pairScoreMax(u8(r.getString(2)), u8(r.getString(3)),
+        r.getByte(4), r.getByte(5), 3, w.ld, w.lcs, w.prefix, w.suffix, w.caseW)
+      val (na, nb) = (alphabet.normalize(a), alphabet.normalize(b))
+      val ref = for {
+        dab <- Scoring.distanceFeatures(na, a, nb, b, 3, w)
+        dba <- Scoring.distanceFeatures(nb, b, na, a, 3, w)
+      } yield math.max(Scoring.score(dab, na.length, w),
+        Scoring.score(dba, nb.length, w))
+      assert(ref.isEmpty == java.lang.Double.isNaN(got), s"a=$a b=$b w=$w got=$got")
+      ref.foreach { v =>
+        assert(v == got, s"a=$a b=$b w=$w kernel=$got reference=$v")
+        scored += 1
+      }
+    }
+    // both channels must be exercised
+    assert(scored > 200, s"only $scored scored pairs")
+    assert(scored < keyed.length * weightSets.length, "no out-of-band pairs")
+  }
+
+  test("pair_accept rejects non-string norms and non-integral case channels") {
+    val df = spark.range(3).select(
+      col("id").cast("string").as("na"), array(col("id")).as("arr"),
+      col("id").cast("string").as("s"), col("id").cast("byte").as("c"))
+    for ((na, ca) <- Seq(col("arr") -> col("c"), col("na") -> col("s"))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(K.pairAccept(na, col("na"), ca, col("c"), 3, 0.7))
+      }
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
+    }
   }
 }

@@ -29,7 +29,7 @@ class SortedIntersectCountSpec extends SparkSpecBase {
     assert(spark.catalog.functionExists("sorted_intersect_count"))
     val df = randomSortedSets(2000, 42L).toDF("id", "a", "b")
     val out = df.select(
-      call_function("sorted_intersect_count", col("a"), col("b")).as("native"),
+      T.sortedIntersectCount(col("a"), col("b")).as("native"),
       size(array_intersect(col("a"), col("b"))).as("builtin")
     ).collect()
     assert(out.forall(r => r.getInt(0) == r.getInt(1)))
@@ -50,7 +50,7 @@ class SortedIntersectCountSpec extends SparkSpecBase {
     assert(out == Map(1L -> 0, 2L -> 0, 3L -> 0, 4L -> 3, 5L -> 2, 6L -> 2))
   }
 
-  test("null arrays null out; picker falls back to array_intersect form") {
+  test("null arrays null out") {
     val df = Seq(
       (1L, Option(Seq(1, 2)), Option(Seq(2, 3))),
       (2L, Option(Seq(1, 2)), None: Option[Seq[Int]])
@@ -61,11 +61,6 @@ class SortedIntersectCountSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1))))
       .toMap
     assert(out == Map(1L -> Some(1), 2L -> None))
-    // picker resolves to the native function in this session
-    val plan = df.select(
-      T.sortedIntersectCountIn(spark)(col("a"), col("b")).as("c"))
-      .queryExecution.analyzed.toString
-    assert(plan.contains("sorted_intersect_count"))
   }
 
   test("interpreted eval path agrees with codegen (whole-stage off)") {
@@ -78,5 +73,22 @@ class SortedIntersectCountSpec extends SparkSpecBase {
       val interpreted = df.select(expr).collect().map(_.getInt(0))
       assert(withCodegen.toSeq == interpreted.toSeq)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+  }
+
+  test("byte and short arrays widen; string and bigint arrays fail analysis") {
+    val df = randomSortedSets(200, 5L).toDF("id", "a", "b")
+    val ints = df.select(T.sortedIntersectCount(col("a"), col("b")))
+      .collect().map(_.getInt(0)).toSeq
+    for (t <- Seq("array<tinyint>", "array<smallint>")) {
+      val narrow = df.select(T.sortedIntersectCount(col("a").cast(t),
+        col("b").cast(t))).collect().map(_.getInt(0)).toSeq
+      assert(narrow == ints, t)
+    }
+    for (t <- Seq("array<string>", "array<bigint>")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(T.sortedIntersectCount(col("a").cast(t), col("b")))
+      }
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), t + ": " + e.getMessage)
+    }
   }
 }
